@@ -315,6 +315,25 @@ object SparkEntry {
   private def hex2(v: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     lpad(conv(v.cast("string"), 10, 16), 2, "0")
 
+  /** Planted mono PCM16 samples as 72 four-hex-char little-endian
+    * strings (`unhex(concat(...))` makes the bytes; callers that need
+    * longer constant segments `repeat` each string): sample i is 4 hex
+    * chars of md5("<doc_id>-<tag><i/8>") mod 32768, so one digest yields
+    * 8 samples — 9 digests per doc, not 72. The plant is fixture cost,
+    * so cheap + deterministic + uniform is all it owes; the decode
+    * oracles restate the same closed form. `tag` keeps each query's
+    * plant independent of the others'. */
+  private def plantedPcm16Hex(docId: org.apache.spark.sql.Column,
+      tag: String): Seq[org.apache.spark.sql.Column] =
+    (0 until 72).map { i =>
+      val v = pmod(conv(substring(md5(concat(docId.cast("string"),
+        lit(s"-$tag${i / 8}")).cast("binary")), 1 + 4 * (i % 8), 4), 16, 10)
+        .cast("int"), lit(32768))
+      concat(
+        lpad(conv(v.bitwiseAND(lit(255)).cast("string"), 10, 16), 2, "0"),
+        lpad(conv(shiftright(v, 8).cast("string"), 10, 16), 2, "0"))
+    }
+
   /** Planted Layer III fixture spec: 16 bytes per granule, byte i = the
     * first md5 byte of "<doc_id>-m3<i>" reduced mod its field modulus
     * (global-gain step 5; three 2-bit scalefactors; two 1-bit slen2
@@ -471,6 +490,30 @@ object SparkEntry {
       df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
     if (df.inputFiles.length >= width) df
     else df.repartition(width, col(key))
+  }
+
+  /** The codec near-dup queries' shared shape: every doc gets a re-keyed
+    * copy (id + 100000) carrying the SAME payload bytes, so exactly one
+    * hamming-0 pair per doc is the analytic pair set. `sig` is a pure
+    * function of those bytes, so it is computed once per doc and the ids
+    * fan out at the signature level: the persisted boundary is the
+    * signature (8 bytes, or 64·nSample bits for video), not the blob, and
+    * the union legs union signatures instead of re-running encode +
+    * decode + hash per id: every pass but one operates on a lightweight
+    * proxy. The banded LSH sees the same (id, sig) multiset
+    * as signing both legs would give. `docs` is the doc_id spine, spread
+    * or not as the query needs; `hamming` comes out as BIGINT for the
+    * oracle. */
+  private def rekeyedCopyPairs(docs: DataFrame, sig: org.apache.spark.sql.Column,
+      maxHamming: Int = 2, sigBits: Int = 64): DataFrame = {
+    val signed = docs
+      .select(col("doc_id").as("id"), sig.as("sig"))
+      .filter(col("sig").isNotNull)
+      .transform(Caches.persisted)
+    Dedup.hammingNearDup(
+      signed.union(signed.select((col("id") + 100000L).as("id"), col("sig"))),
+      maxHamming = maxHamming, sigBits = sigBits)
+      .withColumn("hamming", col("hamming").cast("bigint"))
   }
 
   private def rawQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -1147,23 +1190,9 @@ object SparkEntry {
     // dhash bits are iid fair coins (md5 bytes), so P[hamming ≤ 2] ≈
     // 2.1e3/2⁻⁶⁴ per cross pair — zero expected collisions at any tested
     // sf, making the pair set analytic
-    "dedup_image" -> ((s, d) => {
-      // r18 sign-once: the re-keyed copies share the payload BYTES, so the
-      // signature (a pure function of the bytes) is computed once per
-      // distinct payload and the ids fan out at the 8-byte sig level —
-      // the union legs then union signatures, not payload recomputations
-      // (guide §8: every pass but one operates on a lightweight proxy).
-      // Same (id, sig) multiset into the banded LSH; pair set unchanged.
-      val sigs = spread(Tables.documents(s, d))
-        .select(col("doc_id").as("id"),
-          Multimodal.imageNearDupSig(plantedBitmap(col("doc_id")), 9, 8).as("sig"))
-        .filter(col("sig").isNotNull)
-        .transform(Caches.persisted)
-      Dedup.hammingNearDup(
-        sigs.union(sigs.select((col("id") + 100000L).as("id"), col("sig"))),
-        maxHamming = 2)
-        .withColumn("hamming", col("hamming").cast("bigint"))
-    }),
+    "dedup_image" -> ((s, d) =>
+      rekeyedCopyPairs(spread(Tables.documents(s, d)),
+        Multimodal.imageNearDupSig(plantedBitmap(col("doc_id")), 9, 8))),
     // REAL PNG pixel decode, hash-oracled: the planted 9×8 bitmap is
     // encoded into a GENUINE PNG (signature/IHDR/IDAT/IEND, chunk CRCs,
     // zlib Adler) with STORED deflate blocks + filter 0, then decoded
@@ -1192,21 +1221,11 @@ object SparkEntry {
     // unfilter path sits inside the oracled query; re-keyed copies share
     // blobs bit-for-bit → exactly one hamming-0 pair per doc (same
     // analytic pair set as dedup_image)
-    "dedup_image_png" -> ((s, d) => {
-      // r18 sign-once (see dedup_image): copies share blobs, so encode +
-      // decode + dHash run once per distinct payload
-      val sigs = Tables.documents(s, d)
-        .select(col("doc_id").as("id"),
-          Multimodal.imageNearDupPngSig(
-            Multimodal.pngEncodeGray8(plantedBitmap(col("doc_id")), lit(9),
-              filterMode = -1, stored = false), 9, 8).as("sig"))
-        .filter(col("sig").isNotNull)
-        .transform(Caches.persisted)
-      Dedup.hammingNearDup(
-        sigs.union(sigs.select((col("id") + 100000L).as("id"), col("sig"))),
-        maxHamming = 2)
-        .withColumn("hamming", col("hamming").cast("bigint"))
-    }),
+    "dedup_image_png" -> ((s, d) =>
+      rekeyedCopyPairs(Tables.documents(s, d),
+        Multimodal.imageNearDupSig(Multimodal.pngDecodeLuma(
+          Multimodal.pngEncodeGray8(plantedBitmap(col("doc_id")), lit(9),
+            filterMode = -1, stored = false)), 9, 8))),
     // REAL COLOR PNG pixel decode, hash-oracled (the stored-block move,
     // truecolor edition): the planted 9×8 RGB bitmap is encoded into a
     // GENUINE color-type-2 PNG (stored deflate + filter 0), then decoded
@@ -1301,16 +1320,8 @@ object SparkEntry {
           filterMode = -1))
         .otherwise(Multimodal.pngEncodePal8(plantedBitmap(col("doc_id")), lit(9),
           interlace = true, trns = true, filterMode = -1))
-      // r18 sign-once (see dedup_image)
-      val sigs = spread(Tables.documents(s, d))
-        .select(col("doc_id").as("id"),
-          Multimodal.imageNearDupPngSig(png, 9, 8).as("sig"))
-        .filter(col("sig").isNotNull)
-        .transform(Caches.persisted)
-      Dedup.hammingNearDup(
-        sigs.union(sigs.select((col("id") + 100000L).as("id"), col("sig"))),
-        maxHamming = 2)
-        .withColumn("hamming", col("hamming").cast("bigint"))
+      rekeyedCopyPairs(spread(Tables.documents(s, d)),
+        Multimodal.imageNearDupSig(Multimodal.pngDecodeLuma(png), 9, 8))
     }),
     // REAL WebP (VP8L lossless) pixel decode, hash-oracled: planted RGB
     // channel bytes → the fixture's spec-valid literal-only VP8L stream →
@@ -1363,20 +1374,11 @@ object SparkEntry {
     // luma → dHash → Hamming-LSH): the dedup_image_png_color argument on
     // the last major crawl image format — re-keyed copies share blobs
     // bit-for-bit → exactly one hamming-0 pair per doc, alpha ignored
-    "dedup_image_webp" -> ((s, d) => {
-      // r18 sign-once (see dedup_image)
-      val sigs = Tables.documents(s, d)
-        .select(col("doc_id").as("id"),
-          Multimodal.imageNearDupWebpSig(
-            Multimodal.webpEncodeVp8l(plantedRgbBitmap(col("doc_id"), alpha = true),
-              lit(9), alpha = true), 9, 8).as("sig"))
-        .filter(col("sig").isNotNull)
-        .transform(Caches.persisted)
-      Dedup.hammingNearDup(
-        sigs.union(sigs.select((col("id") + 100000L).as("id"), col("sig"))),
-        maxHamming = 2)
-        .withColumn("hamming", col("hamming").cast("bigint"))
-    }),
+    "dedup_image_webp" -> ((s, d) =>
+      rekeyedCopyPairs(Tables.documents(s, d),
+        Multimodal.imageNearDupSig(Multimodal.webpDecodeLuma(
+          Multimodal.webpEncodeVp8l(plantedRgbBitmap(col("doc_id"), alpha = true),
+            lit(9), alpha = true)), 9, 8))),
     // image near-dup on REAL TRUECOLOR PNG bytes end-to-end (RGBA decode →
     // luma → dHash → Hamming-LSH): color type 6 with a planted alpha
     // channel (ignored by luma — pinned here, because a decoder that read
@@ -1384,20 +1386,11 @@ object SparkEntry {
     // filters cycling 0..4 and REAL deflate, so the full color inflate +
     // bpp-aware unfilter path sits inside the oracled query; re-keyed
     // copies share blobs bit-for-bit → exactly one hamming-0 pair per doc
-    "dedup_image_png_color" -> ((s, d) => {
-      // r18 sign-once (see dedup_image)
-      val sigs = Tables.documents(s, d)
-        .select(col("doc_id").as("id"),
-          Multimodal.imageNearDupPngSig(
-            Multimodal.pngEncodeRgb(plantedRgbBitmap(col("doc_id"), alpha = true), lit(9),
-              filterMode = -1, stored = false, alpha = true), 9, 8).as("sig"))
-        .filter(col("sig").isNotNull)
-        .transform(Caches.persisted)
-      Dedup.hammingNearDup(
-        sigs.union(sigs.select((col("id") + 100000L).as("id"), col("sig"))),
-        maxHamming = 2)
-        .withColumn("hamming", col("hamming").cast("bigint"))
-    }),
+    "dedup_image_png_color" -> ((s, d) =>
+      rekeyedCopyPairs(Tables.documents(s, d),
+        Multimodal.imageNearDupSig(Multimodal.pngDecodeLuma(
+          Multimodal.pngEncodeRgb(plantedRgbBitmap(col("doc_id"), alpha = true), lit(9),
+            filterMode = -1, stored = false, alpha = true)), 9, 8))),
     // decode-drop observability over PLANTED corrupt classes: nine payload
     // classes by doc_id — a valid truecolor PNG (must contribute NO row),
     // junk bytes (bad_magic), a mid-stream-cut PNG (corrupt — header
@@ -1450,20 +1443,11 @@ object SparkEntry {
     // reorder sits inside the banded-LSH query: re-keyed copies share
     // blobs bit-for-bit → exactly one hamming-0 pair per doc; iid planted
     // bytes keep cross pairs outside hamming 2 (the dedup_image argument)
-    "dedup_image_gif" -> ((s, d) => {
-      // r18 sign-once (see dedup_image)
-      val sigs = Tables.documents(s, d)
-        .select(col("doc_id").as("id"),
-          Multimodal.imageNearDupGifSig(
-            Multimodal.gifEncodeGray8(plantedBitmap(col("doc_id")), lit(9),
-              interlace = true), 9, 8).as("sig"))
-        .filter(col("sig").isNotNull)
-        .transform(Caches.persisted)
-      Dedup.hammingNearDup(
-        sigs.union(sigs.select((col("id") + 100000L).as("id"), col("sig"))),
-        maxHamming = 2)
-        .withColumn("hamming", col("hamming").cast("bigint"))
-    }),
+    "dedup_image_gif" -> ((s, d) =>
+      rekeyedCopyPairs(Tables.documents(s, d),
+        Multimodal.imageNearDupSig(Multimodal.gifDecodeLuma(
+          Multimodal.gifEncodeGray8(plantedBitmap(col("doc_id")), lit(9),
+            interlace = true)), 9, 8))),
     // REAL BMP pixel decode, hash-oracled: the planted 9×8 gray bitmap →
     // the fixture's 8-bit BI_RGB BMP (256-gray palette, bottom-up rows
     // with the spec's 4-byte padding: 9-px rows pad to 12) → the full
@@ -1528,20 +1512,10 @@ object SparkEntry {
     // image near-dup on REAL BMP bytes end-to-end (header walk → palette
     // → padded bottom-up rows → luma → dHash → Hamming-LSH): re-keyed
     // copies share blobs bit-for-bit → exactly one hamming-0 pair per doc
-    "dedup_image_bmp" -> ((s, d) => {
-      // r18 sign-once (see dedup_image)
-      val sigs = spread(Tables.documents(s, d))
-        .select(col("doc_id").as("id"),
-          Multimodal.imageNearDupBmpSig(
-            Multimodal.bmpEncodeGray8(plantedBitmap(col("doc_id")), lit(9)),
-            9, 8).as("sig"))
-        .filter(col("sig").isNotNull)
-        .transform(Caches.persisted)
-      Dedup.hammingNearDup(
-        sigs.union(sigs.select((col("id") + 100000L).as("id"), col("sig"))),
-        maxHamming = 2)
-        .withColumn("hamming", col("hamming").cast("bigint"))
-    }),
+    "dedup_image_bmp" -> ((s, d) =>
+      rekeyedCopyPairs(spread(Tables.documents(s, d)),
+        Multimodal.imageNearDupSig(Multimodal.bmpDecodeLuma(
+          Multimodal.bmpEncodeGray8(plantedBitmap(col("doc_id")), lit(9))), 9, 8))),
     // REAL baseline-TIFF pixel decode, hash-oracled: the planted 9×8
     // gray bitmap → the fixture's single-strip BlackIsZero TIFF — in
     // BOTH byte orders (px_hex little-endian II, px_hex_be big-endian
@@ -1611,20 +1585,11 @@ object SparkEntry {
     // luma → dHash → Hamming-LSH), big-endian so the MM path sits inside
     // the banded-LSH query: re-keyed copies share blobs bit-for-bit →
     // exactly one hamming-0 pair per doc
-    "dedup_image_tiff" -> ((s, d) => {
-      // r18 sign-once (see dedup_image)
-      val sigs = Tables.documents(s, d)
-        .select(col("doc_id").as("id"),
-          Multimodal.imageNearDupTiffSig(
-            Multimodal.tiffEncodeGray8(plantedBitmap(col("doc_id")), lit(9),
-              bigEndian = true), 9, 8).as("sig"))
-        .filter(col("sig").isNotNull)
-        .transform(Caches.persisted)
-      Dedup.hammingNearDup(
-        sigs.union(sigs.select((col("id") + 100000L).as("id"), col("sig"))),
-        maxHamming = 2)
-        .withColumn("hamming", col("hamming").cast("bigint"))
-    }),
+    "dedup_image_tiff" -> ((s, d) =>
+      rekeyedCopyPairs(Tables.documents(s, d),
+        Multimodal.imageNearDupSig(Multimodal.tiffDecodeLuma(
+          Multimodal.tiffEncodeGray8(plantedBitmap(col("doc_id")), lit(9),
+            bigEndian = true)), 9, 8))),
     // REAL CCITT bilevel decode, hash-oracled: the planted 9×8 gray
     // bitmap THRESHOLDED at 128 (the fixture contract: v < 128 = black
     // ink) → a real Compression-4 WhiteIsZero TIFF — both byte orders,
@@ -1682,20 +1647,10 @@ object SparkEntry {
     // exactly one hamming-0 pair per doc; bilevel cross-pair bits agree
     // w.p. 5/8 per cell, so a 62-of-64 cross match is ~7e-11 — analytic
     // safety holds through the verify scale
-    "dedup_image_tiff_g4" -> ((s, d) => {
-      // r18 sign-once (see dedup_image)
-      val sigs = Tables.documents(s, d)
-        .select(col("doc_id").as("id"),
-          Multimodal.imageNearDupTiffSig(
-            Multimodal.tiffG4Encode(plantedBitmap(col("doc_id")), lit(9)),
-            9, 8).as("sig"))
-        .filter(col("sig").isNotNull)
-        .transform(Caches.persisted)
-      Dedup.hammingNearDup(
-        sigs.union(sigs.select((col("id") + 100000L).as("id"), col("sig"))),
-        maxHamming = 2)
-        .withColumn("hamming", col("hamming").cast("bigint"))
-    }),
+    "dedup_image_tiff_g4" -> ((s, d) =>
+      rekeyedCopyPairs(Tables.documents(s, d),
+        Multimodal.imageNearDupSig(Multimodal.tiffDecodeLuma(
+          Multimodal.tiffG4Encode(plantedBitmap(col("doc_id")), lit(9))), 9, 8))),
     // FLAC STREAMINFO census, hash-oracled (the audio sibling of
     // multimodal_audio for a format whose FRAMES stay undecoded): the
     // spec-packed bit fields — sample rate 20 bits, channels−1 3 bits,
@@ -2060,45 +2015,21 @@ object SparkEntry {
     // decode → dHash → Hamming-LSH): dedup_image_jpeg's pair argument on
     // the multi-scan wire format — re-keyed copies share blobs
     // bit-for-bit → exactly one hamming-0 pair per doc
-    "dedup_image_jpeg_prog" -> ((s, d) => {
-      // r18 sign-once (see dedup_image): the persisted relation is now the
-      // 8-byte sig, not the jpeg blob — encode AND Annex-G decode run once
-      // per distinct payload instead of once per id
-      val sigs = Tables.documents(s, d)
-        .select(col("doc_id").as("id"),
-          Multimodal.imageNearDupJpegSig(
-            Multimodal.jpegEncodeGray8Prog(plantedJpegBitmap(col("doc_id")), lit(72)),
-            72, 64).as("sig"))
-        .filter(col("sig").isNotNull)
-        .transform(Caches.persisted)
-      Dedup.hammingNearDup(
-        sigs.union(sigs.select((col("id") + 100000L).as("id"), col("sig"))),
-        maxHamming = 2)
-        .withColumn("hamming", col("hamming").cast("bigint"))
-    }),
+    "dedup_image_jpeg_prog" -> ((s, d) =>
+      rekeyedCopyPairs(Tables.documents(s, d),
+        Multimodal.imageNearDupSig(Multimodal.jpegDecodeLuma(
+          Multimodal.jpegEncodeGray8Prog(plantedJpegBitmap(col("doc_id")), lit(72))),
+          72, 64))),
     // image near-dup on REAL JPEG bytes end-to-end (decode → dHash →
     // Hamming-LSH): 72×64 block-constant plants make the dHash grid an
     // identity over ~iid block values; re-keyed copies share blobs
     // bit-for-bit → exactly one hamming-0 pair per doc (dedup_image's
     // analytic pair set, now behind a real entropy-coded decode)
-    "dedup_image_jpeg" -> ((s, d) => {
-      // r18 sign-once (see dedup_image): the persisted multi-consumer
-      // boundary moves from the jpeg BLOB to the 8-byte SIG, so the
-      // Huffman+IDCT decode (the query's dominant cost) runs once per
-      // distinct payload instead of once per id — and the cache holds
-      // 8 bytes/doc instead of the blob
-      val sigs = spread(Tables.documents(s, d))
-        .select(col("doc_id").as("id"),
-          Multimodal.imageNearDupJpegSig(
-            Multimodal.jpegEncodeGray8Dc(plantedJpegBitmap(col("doc_id")), lit(72)),
-            72, 64).as("sig"))
-        .filter(col("sig").isNotNull)
-        .transform(Caches.persisted)
-      Dedup.hammingNearDup(
-        sigs.union(sigs.select((col("id") + 100000L).as("id"), col("sig"))),
-        maxHamming = 2)
-        .withColumn("hamming", col("hamming").cast("bigint"))
-    }),
+    "dedup_image_jpeg" -> ((s, d) =>
+      rekeyedCopyPairs(spread(Tables.documents(s, d)),
+        Multimodal.imageNearDupSig(Multimodal.jpegDecodeLuma(
+          Multimodal.jpegEncodeGray8Dc(plantedJpegBitmap(col("doc_id")), lit(72))),
+          72, 64))),
     // multimodal_decode_jpeg's COLOR sibling: a real 3-component YCbCr
     // 4:2:0 baseline JPEG (24×20 luma over a 2×2 grid of 16×16-constant
     // MCU tiles, chroma planes pinned at 32/224 so the scan carries REAL
@@ -2133,21 +2064,11 @@ object SparkEntry {
     // constant 16×8 MCU tile (the dedup_image_jpeg identity argument on
     // 3-component subsampled payloads); re-keyed copies share blobs
     // bit-for-bit → exactly one hamming-0 pair per doc
-    "dedup_image_jpeg_color" -> ((s, d) => {
-      // r18 sign-once (see dedup_image_jpeg)
-      val sigs = spread(Tables.documents(s, d))
-        .select(col("doc_id").as("id"),
-          Multimodal.imageNearDupJpegSig(
-            Multimodal.jpegEncodeYccDc(
-              plantedJpegColorBitmap(col("doc_id")), lit(144), 2, 1),
-            144, 64).as("sig"))
-        .filter(col("sig").isNotNull)
-        .transform(Caches.persisted)
-      Dedup.hammingNearDup(
-        sigs.union(sigs.select((col("id") + 100000L).as("id"), col("sig"))),
-        maxHamming = 2)
-        .withColumn("hamming", col("hamming").cast("bigint"))
-    }),
+    "dedup_image_jpeg_color" -> ((s, d) =>
+      rekeyedCopyPairs(spread(Tables.documents(s, d)),
+        Multimodal.imageNearDupSig(Multimodal.jpegDecodeLuma(
+          Multimodal.jpegEncodeYccDc(plantedJpegColorBitmap(col("doc_id")), lit(144), 2, 1)),
+          144, 64))),
 
     // REAL PCM sample decode + audio-quality gate on planted 16-bit WAVs:
     // four md5-derived int16 samples (u16 from the first 4 md5 hex chars,
@@ -2232,19 +2153,10 @@ object SparkEntry {
     "dedup_video" -> ((s, d) => {
       val frames = array((0 until 2).map(f =>
         Multimodal.jpegEncodeYccDc(plantedVideoFrameSmall(col("doc_id"), f), lit(72), 1, 1)): _*)
-      // r18 sign-once (see dedup_image): the persisted boundary is the
-      // 128-bit clip sig — container walk + frame decodes run once per
-      // distinct footage
-      val sigs = Tables.documents(s, d)
-        .select(col("doc_id").as("id"),
-          Multimodal.videoNearDupSig(
-            Multimodal.aviMjpegEncode(frames, 72, 32), 72, 32, nSample = 2).as("sig"))
-        .filter(col("sig").isNotNull)
-        .transform(Caches.persisted)
-      Dedup.hammingNearDup(
-        sigs.union(sigs.select((col("id") + 100000L).as("id"), col("sig"))),
+      rekeyedCopyPairs(Tables.documents(s, d),
+        Multimodal.videoNearDupSig(Multimodal.aviMjpegEncode(frames, 72, 32), 72, 32,
+          nSample = 2),
         maxHamming = 1, sigBits = 64 * 2)
-        .withColumn("hamming", col("hamming").cast("bigint"))
     }),
     // audio near-dup on REAL WAV bytes end-to-end (PCM decode → 72-bucket
     // energy envelope → dHash → Hamming-LSH — dedup_image's argument on
@@ -2263,13 +2175,7 @@ object SparkEntry {
     // paths the fixture doesn't emit are pinned by hand-assembled spec
     // vectors in MultimodalSpec.
     "multimodal_decode_flac" -> ((s, d) => {
-      def v(i: Int) = pmod(conv(substring(md5(concat(col("doc_id").cast("string"),
-        lit(s"-fd${i / 8}")).cast("binary")), 1 + 4 * (i % 8), 4), 16, 10)
-        .cast("int"), lit(32768))
-      def leHex(vv: org.apache.spark.sql.Column) = concat(
-        lpad(conv(vv.bitwiseAND(lit(255)).cast("string"), 10, 16), 2, "0"),
-        lpad(conv(shiftright(vv, 8).cast("string"), 10, 16), 2, "0"))
-      val data = unhex(concat((0 until 72).map(i => repeat(leHex(v(i)), 16)): _*))
+      val data = unhex(concat(plantedPcm16Hex(col("doc_id"), "fd").map(repeat(_, 16)): _*))
       spread(Tables.documents(s, d))
         .select(col("doc_id"),
           Multimodal.flacEncodePcm16(data, lit(1), rate = 16000).as("flac"))
@@ -2281,25 +2187,10 @@ object SparkEntry {
     // argument on the compressed wire format — re-keyed copies share
     // blobs bit-for-bit → exactly one hamming-0 pair per doc
     "dedup_audio_flac" -> ((s, d) => {
-      def v(i: Int) = pmod(conv(substring(md5(concat(col("doc_id").cast("string"),
-        lit(s"-af${i / 8}")).cast("binary")), 1 + 4 * (i % 8), 4), 16, 10)
-        .cast("int"), lit(32768))
-      def leHex(vv: org.apache.spark.sql.Column) = concat(
-        lpad(conv(vv.bitwiseAND(lit(255)).cast("string"), 10, 16), 2, "0"),
-        lpad(conv(shiftright(vv, 8).cast("string"), 10, 16), 2, "0"))
-      val data = unhex(concat((0 until 72).map(i => repeat(leHex(v(i)), 16)): _*))
-      // r18 sign-once (see dedup_image_jpeg): FLAC frame decode runs once
-      // per distinct payload; the persisted boundary is the 8-byte sig
-      val sigs = spread(Tables.documents(s, d))
-        .select(col("doc_id").as("id"),
-          Multimodal.audioNearDupFlacSig(
-            Multimodal.flacEncodePcm16(data, lit(1), rate = 16000)).as("sig"))
-        .filter(col("sig").isNotNull)
-        .transform(Caches.persisted)
-      Dedup.hammingNearDup(
-        sigs.union(sigs.select((col("id") + 100000L).as("id"), col("sig"))),
-        maxHamming = 2)
-        .withColumn("hamming", col("hamming").cast("bigint"))
+      val data = unhex(concat(plantedPcm16Hex(col("doc_id"), "af").map(repeat(_, 16)): _*))
+      rekeyedCopyPairs(spread(Tables.documents(s, d)),
+        Multimodal.audioNearDupSig(Multimodal.flacDecodeWav(
+          Multimodal.flacEncodePcm16(data, lit(1), rate = 16000))))
     }),
     // HEIF/AVIF image census, oracled: planted geometry behind REAL
     // meta/iprp machinery — the census must recover brand, primary item
@@ -2487,13 +2378,7 @@ object SparkEntry {
     // chunk) straight off the blob, so builder and walker cannot share
     // a compensating offset bug.
     "multimodal_decode_wav_profiles" -> ((s, d) => {
-      def v(i: Int) = pmod(conv(substring(md5(concat(col("doc_id").cast("string"),
-        lit(s"-wp${i / 8}")).cast("binary")), 1 + 4 * (i % 8), 4), 16, 10)
-        .cast("int"), lit(32768))
-      def leHex(vv: org.apache.spark.sql.Column) = concat(
-        lpad(conv(vv.bitwiseAND(lit(255)).cast("string"), 10, 16), 2, "0"),
-        lpad(conv(shiftright(vv, 8).cast("string"), 10, 16), 2, "0"))
-      val pcm = unhex(concat((0 until 72).map(i => leHex(v(i))): _*))
+      val pcm = unhex(concat(plantedPcm16Hex(col("doc_id"), "wp"): _*))
       def prof(p: String) = Multimodal.wavProfileEncode(pcm, lit(1), 16000, p)
       // the G.711 fixtures take the planted BYTES as the code stream
       def g711(p: String) = Multimodal.wavProfileEncode(
@@ -2568,13 +2453,7 @@ object SparkEntry {
     // cross-profile twin at hamming 0 (the WAV≡FLAC lossless argument,
     // extended across WAV's own profile zoo)
     "dedup_audio_wavx" -> ((s, d) => {
-      def v(i: Int) = pmod(conv(substring(md5(concat(col("doc_id").cast("string"),
-        lit(s"-ax${i / 8}")).cast("binary")), 1 + 4 * (i % 8), 4), 16, 10)
-        .cast("int"), lit(32768))
-      def leHex(vv: org.apache.spark.sql.Column) = concat(
-        lpad(conv(vv.bitwiseAND(lit(255)).cast("string"), 10, 16), 2, "0"),
-        lpad(conv(shiftright(vv, 8).cast("string"), 10, 16), 2, "0"))
-      val pcm = unhex(concat((0 until 72).map(i => leHex(v(i))): _*))
+      val pcm = unhex(concat(plantedPcm16Hex(col("doc_id"), "ax"): _*))
       val base = spread(Tables.documents(s, d)).select(col("doc_id").as("id"),
         Multimodal.wavProfileEncode(pcm, lit(1), 16000, "float32").as("wav"))
       val copies = spread(Tables.documents(s, d)).select(
@@ -2584,29 +2463,10 @@ object SparkEntry {
         .withColumn("hamming", col("hamming").cast("bigint"))
     }),
     "dedup_audio" -> ((s, d) => {
-      // 8 segment values per md5 (4 hex chars each): 9 digests per doc,
-      // not 72 — the plant is fixture cost, and the pair-set oracle never
-      // recomputes it, so cheap + deterministic + uniform is all it owes
-      def v(i: Int) = pmod(conv(substring(md5(concat(col("doc_id").cast("string"),
-        lit(s"-a${i / 8}")).cast("binary")), 1 + 4 * (i % 8), 4), 16, 10)
-        .cast("int"), lit(32768))
-      def leHex(vv: org.apache.spark.sql.Column) = concat(
-        lpad(conv(vv.bitwiseAND(lit(255)).cast("string"), 10, 16), 2, "0"),
-        lpad(conv(shiftright(vv, 8).cast("string"), 10, 16), 2, "0"))
-      val data = unhex(concat((0 until 72).map(i => repeat(leHex(v(i)), 16)): _*))
-      // r18 sign-once (see dedup_image): envelope + dHash run once per
-      // distinct clip; the persisted boundary is the 8-byte sig
-      val sigs = Tables.documents(s, d)
-        .select(col("doc_id").as("id"),
-          Multimodal.audioNearDupSig(
-            concat(Multimodal.wavHeader(lit(1L), lit(16000L), lit(16L), lit(2304L)),
-              data)).as("sig"))
-        .filter(col("sig").isNotNull)
-        .transform(Caches.persisted)
-      Dedup.hammingNearDup(
-        sigs.union(sigs.select((col("id") + 100000L).as("id"), col("sig"))),
-        maxHamming = 2)
-        .withColumn("hamming", col("hamming").cast("bigint"))
+      val data = unhex(concat(plantedPcm16Hex(col("doc_id"), "a").map(repeat(_, 16)): _*))
+      rekeyedCopyPairs(Tables.documents(s, d),
+        Multimodal.audioNearDupSig(
+          concat(Multimodal.wavHeader(lit(1L), lit(16000L), lit(16L), lit(2304L)), data)))
     }),
 
     // --- north-star: text analysis ---

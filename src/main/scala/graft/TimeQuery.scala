@@ -22,7 +22,7 @@ object TimeQuery {
           case _ => sys.error(s"SPARK_GRAFT_SET: segment without '=': '$kv'")
         }
       })
-    // opt-in per-job timing (same knob as ProfileRetract): job wall time,
+    // opt-in per-job timing (SPARK_GRAFT_PROFILE_JOBS=1): job wall time,
     // stage names and task counts, so a slow query decomposes from the log
     if (sys.env.get("SPARK_GRAFT_PROFILE_JOBS").contains("1")) {
       val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()

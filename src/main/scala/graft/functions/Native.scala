@@ -11702,12 +11702,18 @@ object Native {
     "graft_top_centroids" -> (exprs => TopCentroids(exprs(0),
       floatSeqSeqLit(exprs(1), "centroids"), intLit(exprs(2), "nprobe"))))
 
+  /** Register every builder the session does not hold yet. Names it
+    * already holds (an earlier call, or [[injectInto]]) are skipped:
+    * replacing them would swap in an equivalent builder and log a
+    * "replaced a previously registered function" WARN per name, on every
+    * query call. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     // NB: Spark 4 validates the source string — "built-in" (with hyphen) is
     // the accepted value; "builtin" throws at registration time.
     builders.foreach { case (name, b) =>
-      reg.createOrReplaceTempFunction(name, b, "built-in")
+      if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, b, "built-in")
     }
   }
 

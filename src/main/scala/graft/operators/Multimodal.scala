@@ -747,6 +747,12 @@ object Multimodal {
     * a billion-image corpus bands over 8 GB of signatures — the pixel
     * payloads never enter any shuffle.
     *
+    * Encoded images reach this tier by composition, not by a per-format
+    * operator: put the format's luma decode in front of the signature,
+    * e.g. `images.withColumn("img", pngDecodeLuma(col("png")))` here, or
+    * `imageNearDupSig(jpegDecodeLuma(jpeg), w, h)` in a signed relation.
+    * Payloads the decoder refuses sign NULL and drop before any shuffle.
+    *
     * @param images (id, img BINARY) — img a width×height grayscale bitmap */
   def imageNearDup(images: DataFrame, width: Int, height: Int,
       maxHamming: Int = 2, maxBucketSize: Int = 64): DataFrame =
@@ -827,27 +833,6 @@ object Multimodal {
       filterMode: Int = 0, stored: Boolean = false, alpha: Boolean = false): Column =
     graft.functions.Native.pngEncodeRgb(pixels, width, filterMode, stored, alpha)
 
-  /** Image near-dup on REAL PNG payloads, end-to-end: [[pngDecodeLuma]]
-    * → [[dHash]] → the shared Hamming-banded LSH core — the composition
-    * [[imageNearDup]] runs on pre-decoded bitmaps, now from actual image
-    * bytes. Covers grayscale, truecolor (RGB/RGBA), AND paletted PNGs,
-    * interlaced or not — the full crawl-PNG population. Undecodable
-    * payloads (corrupt, non-PNG, gray+alpha/16-bit) drop at the
-    * decode stage, before any shuffle; only the 8-byte signatures band.
-    * `images` carries (id, png BINARY) of `width`×`height` images. */
-  def imageNearDupPng(images: DataFrame, width: Int, height: Int,
-      maxHamming: Int = 2, maxBucketSize: Int = 64): DataFrame =
-    Dedup.hammingNearDup(
-      images.select(col("id"),
-        imageNearDupPngSig(col("png"), width, height).as("sig"))
-        .filter(col("sig").isNotNull),
-      maxHamming, maxBucketSize)
-
-  /** [[imageNearDupPng]]'s signature expression (see [[imageNearDupSig]]
-    * for the sign-once contract). */
-  def imageNearDupPngSig(png: Column, width: Int, height: Int): Column =
-    graft.functions.Native.opaque(dHash(pngDecodeLuma(png), width, height))
-
   /** REAL WebP pixel decode to the luma plane
     * ([[graft.functions.Native.WebpLumaDecode]]). VP8L lossless: the
     * full public lossless bitstream — prefix codes, color cache, LZ77
@@ -879,22 +864,6 @@ object Multimodal {
   def webpEncodeVp8(pixels: Column, width: Column, nparts: Int = 1): Column =
     graft.functions.Native.webpVp8Encode(pixels, width, nparts)
 
-  /** [[imageNearDupPng]] on WebP payloads: [[webpDecodeLuma]] → [[dHash]]
-    * → the shared Hamming-banded LSH core. Closes the last major crawl
-    * image format that previously dropped undecoded at this tier. */
-  def imageNearDupWebp(images: DataFrame, width: Int, height: Int,
-      maxHamming: Int = 2, maxBucketSize: Int = 64): DataFrame =
-    Dedup.hammingNearDup(
-      images.select(col("id"),
-        imageNearDupWebpSig(col("webp"), width, height).as("sig"))
-        .filter(col("sig").isNotNull),
-      maxHamming, maxBucketSize)
-
-  /** [[imageNearDupWebp]]'s signature expression (see [[imageNearDupSig]]
-    * for the sign-once contract). */
-  def imageNearDupWebpSig(webp: Column, width: Int, height: Int): Column =
-    graft.functions.Native.opaque(dHash(webpDecodeLuma(webp), width, height))
-
   /** REAL GIF (87a/89a) first-frame pixel decode to the exact-integer
     * luma plane ([[graft.functions.Native.GifLumaDecode]]): block walk,
     * GIF-LZW, global/local palettes, 4-pass interlace. Animated GIFs
@@ -923,22 +892,6 @@ object Multimodal {
     * decode. Null structs for structurally-incomplete files. */
   def gifFrameCount(gif: Column): Column = graft.functions.Native.gifFrameCount(gif)
   def gifLoopCount(gif: Column): Column = graft.functions.Native.gifLoopCount(gif)
-
-  /** [[imageNearDupPng]] on GIF payloads: [[gifDecodeLuma]] → [[dHash]]
-    * → the shared Hamming-banded LSH core. With PNG, JPEG, WebP and GIF
-    * this tier now covers the four most common crawl image formats. */
-  def imageNearDupGif(images: DataFrame, width: Int, height: Int,
-      maxHamming: Int = 2, maxBucketSize: Int = 64): DataFrame =
-    Dedup.hammingNearDup(
-      images.select(col("id"),
-        imageNearDupGifSig(col("gif"), width, height).as("sig"))
-        .filter(col("sig").isNotNull),
-      maxHamming, maxBucketSize)
-
-  /** [[imageNearDupGif]]'s signature expression (see [[imageNearDupSig]]
-    * for the sign-once contract). */
-  def imageNearDupGifSig(gif: Column, width: Int, height: Int): Column =
-    graft.functions.Native.opaque(dHash(gifDecodeLuma(gif), width, height))
 
   /** REAL BMP pixel decode to the exact-integer luma plane ([[graft
     * .functions.Native.BmpLumaDecode]]): 1/2/4/8-bit palette, 24/32-bit
@@ -972,21 +925,6 @@ object Multimodal {
   def bmpEncodeGray8(pixels: Column, width: Column, topDown: Boolean = false,
       rle: Boolean = false, os2: Boolean = false): Column =
     graft.functions.Native.bmpEncodeGray8(pixels, width, topDown, rle, os2)
-
-  /** [[imageNearDupPng]] on BMP payloads: [[bmpDecodeLuma]] → [[dHash]]
-    * → the shared Hamming-banded LSH core. */
-  def imageNearDupBmp(images: DataFrame, width: Int, height: Int,
-      maxHamming: Int = 2, maxBucketSize: Int = 64): DataFrame =
-    Dedup.hammingNearDup(
-      images.select(col("id"),
-        imageNearDupBmpSig(col("bmp"), width, height).as("sig"))
-        .filter(col("sig").isNotNull),
-      maxHamming, maxBucketSize)
-
-  /** [[imageNearDupBmp]]'s signature expression (see [[imageNearDupSig]]
-    * for the sign-once contract). */
-  def imageNearDupBmpSig(bmp: Column, width: Int, height: Int): Column =
-    graft.functions.Native.opaque(dHash(bmpDecodeLuma(bmp), width, height))
 
   /** REAL TIFF pixel decode to the exact-integer luma plane
     * ([[graft.functions.Native.TiffLumaDecode]]): both byte orders,
@@ -1044,21 +982,6 @@ object Multimodal {
   def tiffJpegEncode(jpeg: Column, bigEndian: Boolean = false,
       split: Boolean = false): Column =
     graft.functions.Native.tiffJpegEncode(jpeg, bigEndian, split)
-
-  /** [[imageNearDupPng]] on TIFF payloads: [[tiffDecodeLuma]] → [[dHash]]
-    * → the shared Hamming-banded LSH core. */
-  def imageNearDupTiff(images: DataFrame, width: Int, height: Int,
-      maxHamming: Int = 2, maxBucketSize: Int = 64): DataFrame =
-    Dedup.hammingNearDup(
-      images.select(col("id"),
-        imageNearDupTiffSig(col("tiff"), width, height).as("sig"))
-        .filter(col("sig").isNotNull),
-      maxHamming, maxBucketSize)
-
-  /** [[imageNearDupTiff]]'s signature expression (see [[imageNearDupSig]]
-    * for the sign-once contract). */
-  def imageNearDupTiffSig(tiff: Column, width: Int, height: Int): Column =
-    graft.functions.Native.opaque(dHash(tiffDecodeLuma(tiff), width, height))
 
   /** REAL baseline-JPEG pixel decode ([[graft.functions.Native
     * .JpegGray8Decode]]): single-component (grayscale) SOF0 JPEG bytes →
@@ -1119,26 +1042,6 @@ object Multimodal {
   def jpegEncodeYccDc(pixels: Column, width: Column,
       hSamp: Int, vSamp: Int, cb: Int = 128, cr: Int = 128): Column =
     graft.functions.Native.jpegEncodeYccDc(pixels, width, hSamp, vSamp, cb, cr)
-
-  /** Image near-dup on REAL JPEG payloads, end-to-end: [[jpegDecodeLuma]]
-    * → [[dHash]] → the shared Hamming-banded LSH core ([[imageNearDupPng]]'s
-    * exact shape on the other crawl format). Decodes the luma plane of
-    * grayscale AND color baseline JPEGs — the full crawl-image population
-    * — skipping all chroma IDCT/upsampling work (dHash only reads
-    * luminance). Undecodable payloads drop at the decode stage, before
-    * any shuffle; only 8-byte signatures band. */
-  def imageNearDupJpeg(images: DataFrame, width: Int, height: Int,
-      maxHamming: Int = 2, maxBucketSize: Int = 64): DataFrame =
-    Dedup.hammingNearDup(
-      images.select(col("id"),
-        imageNearDupJpegSig(col("jpeg"), width, height).as("sig"))
-        .filter(col("sig").isNotNull),
-      maxHamming, maxBucketSize)
-
-  /** [[imageNearDupJpeg]]'s signature expression (see [[imageNearDupSig]]
-    * for the sign-once contract). */
-  def imageNearDupJpegSig(jpeg: Column, width: Int, height: Int): Column =
-    graft.functions.Native.opaque(dHash(jpegDecodeLuma(jpeg), width, height))
 
   /** Frame-sample positions for a media payload of `durationMs`, every
     * `everyMs` — the pure-Spark plumbing of a video frame sampler (the
@@ -1311,8 +1214,8 @@ object Multimodal {
     graft.functions.Native.wavEnvelope(wav, nBuckets)
 
   /** Audio near-dup on REAL WAV payloads, end-to-end — the AUDIO sibling
-    * of [[imageNearDupPng]]/[[imageNearDupJpeg]]: decode the PCM stream
-    * into a 72-bucket energy envelope ([[wavEnvelope]]), hash the
+    * of [[imageNearDup]]: decode the PCM stream into a 72-bucket energy
+    * envelope ([[wavEnvelope]]), hash the
     * envelope as a 9×8 bitmap ([[dHash]] — one grid cell per bucket, so
     * the signature reacts to the loudness CONTOUR, not absolute gain
     * bytes), then the shared Hamming-banded LSH core. Catches re-encoded
@@ -1320,7 +1223,10 @@ object Multimodal {
     * duplicate detector, not a cover-song matcher. Undecodable or
     * too-short clips drop at the decode stage, before any shuffle; only
     * 8-byte signatures band. Scale shape: identical to the image tiers —
-    * map-side decode fused into the scan, ONE signature-keyed shuffle. */
+    * map-side decode fused into the scan, ONE signature-keyed shuffle.
+    * Other audio formats compose their decoder in front, e.g.
+    * `audioNearDupSig(flacDecodeWav(flac))`: a WAV and its lossless FLAC
+    * encode sign identically. */
   def audioNearDup(clips: DataFrame, maxHamming: Int = 2,
       maxBucketSize: Int = 64): DataFrame =
     Dedup.hammingNearDup(
@@ -1382,24 +1288,6 @@ object Multimodal {
   def flacEncodePcm16(samples: Column, channels: Column,
       rate: Int, blockSize: Int = 1024): Column =
     graft.functions.Native.flacEncodePcm16(samples, channels, rate, blockSize)
-
-  /** [[audioNearDup]] on REAL FLAC payloads: frame decode → PCM16 WAV →
-    * the SAME 72-bucket envelope → dHash → Hamming-banded LSH core, so
-    * the audio tier's pair semantics are identical across WAV and FLAC
-    * (a WAV and its lossless FLAC encode hash identically — that is the
-    * point). Undecodable or out-of-contract clips drop at the decode
-    * stage, before any shuffle. */
-  def audioNearDupFlac(clips: DataFrame, maxHamming: Int = 2,
-      maxBucketSize: Int = 64): DataFrame =
-    Dedup.hammingNearDup(
-      clips.select(col("id"), audioNearDupFlacSig(col("flac")).as("sig"))
-        .filter(col("sig").isNotNull),
-      maxHamming, maxBucketSize)
-
-  /** [[audioNearDupFlac]]'s signature expression (see [[imageNearDupSig]]
-    * for the sign-once contract). */
-  def audioNearDupFlacSig(flac: Column): Column =
-    graft.functions.Native.opaque(dHash(wavEnvelope(flacDecodeWav(flac), 72), 9, 8))
 
   /** Audio-quality gate — the per-clip screen a speech/multimodal
     * pipeline runs BEFORE paying for transcription or feature

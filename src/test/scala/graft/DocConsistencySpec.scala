@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * Maintenance contract: when a decoder graduates a profile, update the
   * branch comment AND the keyword lists here in the SAME commit — that
-  * is the point.
+  * is the point. The README's oracle-coverage count is pinned the same
+  * way, against the query and oracle registries.
   */
 class DocConsistencySpec extends AnyFunSuite {
 
@@ -112,5 +113,12 @@ class DocConsistencySpec extends AnyFunSuite {
         "extended-sequential/lossless", "os/2-v2 bmp —"))
       assert(!doc.contains(stale),
         s"DecodeDropReason doc lists '$stale' as refused but it graduated")
+  }
+
+  test("README states the oracle coverage the query registry actually has") {
+    val in = scala.io.Source.fromFile(new java.io.File("README.md"), "UTF-8")
+    val readme = try in.mkString finally in.close()
+    val claim = s"(${SparkEntry.oracleSql.size} of ${SparkEntry.queries.size} queries oracled"
+    assert(readme.contains(claim), s"README no longer states '$claim'")
   }
 }

@@ -236,6 +236,21 @@ class FuncsSpec extends AnyFunSuite {
     }
   }
 
+  test("Native.register is once per session: a second call replaces no graft_* builder") {
+    val reg = spark.sessionState.functionRegistry
+    val ids = reg.listFunction().filter(_.funcName.startsWith("graft_"))
+    assert(ids.exists(_.funcName == "graft_dot"))
+    def held = ids.map(id => id -> (reg.lookupFunctionBuilder(id).get, reg.lookupFunction(id).get))
+      .toMap
+    val before = held
+    graft.functions.Native.register(spark)
+    val after = held
+    for (id <- ids) {
+      assert(after(id)._1 eq before(id)._1, s"${id.funcName}: builder replaced")
+      assert(after(id)._2 eq before(id)._2, s"${id.funcName}: registration replaced")
+    }
+  }
+
   test("winnow fingerprints overlap on shared substrings, not on disjoint docs") {
     val shared = (1 to 20).map(i => s"s$i").mkString(" ")
     val a = s"intro words here $shared trailing alpha"

@@ -2158,7 +2158,7 @@ class MultimodalSpec extends AnyFunSuite {
       (3L, clip(6)), (4L, clip(7)),
       (5L, "not flac".getBytes("UTF-8"))) // drops at decode
       .toDF("id", "flac")
-    val pairs = Multimodal.audioNearDupFlac(rows)
+    val pairs = Multimodal.audioNearDup(rows.withColumn("wav", Multimodal.flacDecodeWav($"flac")))
       .select($"id_a", $"id_b", $"hamming").as[(Long, Long, Int)].collect().toSet
     assert(pairs == Set((1L, 2L, 0)))
   }
@@ -3060,12 +3060,14 @@ class MultimodalSpec extends AnyFunSuite {
       .toDF("id", "px")
       .select($"id",
         Multimodal.pngEncodeGray8($"px", lit(9), filterMode = -1, stored = false).as("png"))
-    val pairs = Multimodal.imageNearDupPng(imgs, 9, 8, maxHamming = 2)
+    val pairs = Multimodal.imageNearDup(
+      imgs.withColumn("img", Multimodal.pngDecodeLuma($"png")), 9, 8, maxHamming = 2)
       .as[(Long, Long, Int)].collect().toSet
     assert(pairs == Set((1L, 2L, 0)))
     // a corrupt payload drops at decode, silently
     val withBad = imgs.union(Seq((9L, "nope".getBytes("UTF-8"))).toDF("id", "png"))
-    val pairs2 = Multimodal.imageNearDupPng(withBad, 9, 8, maxHamming = 2)
+    val pairs2 = Multimodal.imageNearDup(
+      withBad.withColumn("img", Multimodal.pngDecodeLuma($"png")), 9, 8, maxHamming = 2)
       .as[(Long, Long, Int)].collect().toSet
     assert(pairs2 == Set((1L, 2L, 0)))
   }
@@ -3585,7 +3587,8 @@ class MultimodalSpec extends AnyFunSuite {
     val rows = Seq((1L, img(1)), (2L, img(1)), (3L, img(3)), (4L, img(4)))
       .toDF("id", "px")
       .select($"id", Multimodal.webpEncodeVp8l($"px", lit(9)).as("webp"))
-    val pairs = Multimodal.imageNearDupWebp(rows, 9, 8, maxHamming = 2)
+    val pairs = Multimodal.imageNearDup(
+      rows.withColumn("img", Multimodal.webpDecodeLuma($"webp")), 9, 8, maxHamming = 2)
       .select($"id_a", $"id_b", $"hamming".cast("bigint"))
       .as[(Long, Long, Long)].collect().toSet
     assert(pairs == Set((1L, 2L, 0L)))
@@ -3692,7 +3695,8 @@ class MultimodalSpec extends AnyFunSuite {
       .select($"id",
         Multimodal.pngEncodeRgb($"px", lit(9), filterMode = -1, stored = false,
           alpha = true).as("png"))
-    val pairs = Multimodal.imageNearDupPng(imgs, 9, 8, maxHamming = 2)
+    val pairs = Multimodal.imageNearDup(
+      imgs.withColumn("img", Multimodal.pngDecodeLuma($"png")), 9, 8, maxHamming = 2)
       .as[(Long, Long, Int)].collect().toSet
     assert(pairs == Set((1L, 2L, 0)))
   }
@@ -4101,7 +4105,8 @@ class MultimodalSpec extends AnyFunSuite {
       (3L, jpegOf(202)), (4L, jpegOf(303)),
       (5L, "corrupt".getBytes("UTF-8"))) // drops at decode, never pairs
       .toDF("id", "jpeg")
-    val pairs = Multimodal.imageNearDupJpeg(imgs, 72, 64, maxHamming = 2)
+    val pairs = Multimodal.imageNearDup(
+      imgs.withColumn("img", Multimodal.jpegDecodeLuma($"jpeg")), 72, 64, maxHamming = 2)
       .select($"id_a", $"id_b", $"hamming").as[(Long, Long, Int)].collect().toSet
     assert(pairs == Set((1L, 2L, 0)))
   }
@@ -4281,7 +4286,8 @@ class MultimodalSpec extends AnyFunSuite {
       (3L, colorJpegOf(8)), (4L, colorJpegOf(9)),
       (5L, "corrupt".getBytes("UTF-8")))
       .toDF("id", "jpeg")
-    val pairs = Multimodal.imageNearDupJpeg(imgs, 144, 128, maxHamming = 2)
+    val pairs = Multimodal.imageNearDup(
+      imgs.withColumn("img", Multimodal.jpegDecodeLuma($"jpeg")), 144, 128, maxHamming = 2)
       .select($"id_a", $"id_b", $"hamming").as[(Long, Long, Int)].collect().toSet
     assert(pairs == Set((1L, 2L, 0)))
   }

@@ -578,12 +578,21 @@ class OperatorsSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, dir)
     val got = Dedup.ngramJaccard(docs, n = 3, threshold = 0.5)
       .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
-    // brute-force oracle: full cross join + exact Jaccard (sf0.001 is small)
-    def side(id: String, t: String) = docs.select($"doc_id".as(id), $"text".as(t))
-    val brute = Dedup.jaccardNgram(
-      side("id_a", "ta").join(side("id_b", "tb"), $"id_a" < $"id_b"), "ta", "tb", 3)
-      .filter($"jaccard" >= 0.5)
-      .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
+    // brute-force oracle: exact Jaccard over all pairs (sf0.001 is small),
+    // on the shingle sets Dedup.jaccardNgram builds, with the same double
+    // division — computed driver-side, since a Spark cross join of every
+    // pair costs minutes for the same answer
+    val shingles = docs
+      .select($"doc_id",
+        array_distinct(graft.functions.Funcs.wordShingles(
+          graft.functions.Funcs.tokens($"text"), 3)))
+      .as[(Long, Option[Seq[String]])].collect()
+      .collect { case (id, Some(sh)) => (id, sh.toSet) } // null text never pairs
+    val brute = (for {
+      (a, sa) <- shingles.iterator
+      (b, sb) <- shingles.iterator
+      if a < b && (sa & sb).size.toDouble / (sa | sb).size.toDouble >= 0.5
+    } yield (a, b)).toSet
     assert(got == brute, s"prefix filter lost ${brute.diff(got).size}, invented ${got.diff(brute).size}")
     assert(brute.nonEmpty) // the corpus plants near-dups; the test must bite
   }

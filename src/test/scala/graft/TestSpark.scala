@@ -2,20 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites (sbt forks a single test JVM). */
+/** One shared local session for all suites (sbt forks a single test JVM),
+  * built by the same recipe Bench and Verify run, so the suite exercises
+  * their optimizer settings. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    graft.functions.Native.register(s)
-    s
-  }
+  lazy val spark: SparkSession = Sessions.local("4")
   val Sf0001 = "/root/testdata/sf0.001"
 }
